@@ -87,6 +87,16 @@ private[engine] object FsUtil {
     } finally walk.close()
   }
 
+  /** True when `dir` holds table data: a `contract=` partition or a loose
+    * parquet file. Tells a live store (and a tombstone sidecar) from an
+    * empty or missing directory. */
+  def hasData(dir: Path): Boolean =
+    Files.isDirectory(dir) && {
+      val kids = dir.toFile.listFiles
+      kids != null && kids.exists(f =>
+        f.getName.startsWith("contract=") || f.getName.endsWith(".parquet"))
+    }
+
   /** Hardlink `src` to `dst` — a metadata-only carry-over for files a
     * rewrite does not touch (compaction); falls back to a real copy where
     * the filesystem cannot link. The object-store analogue is a
@@ -141,13 +151,6 @@ object PosixSwapCommit extends StoreCommitProtocol {
     FsUtil.deleteTree(po)
   }
 
-  private def hasData(dir: Path): Boolean =
-    Files.isDirectory(dir) && {
-      val kids = dir.toFile.listFiles
-      kids != null && kids.exists(f =>
-        f.getName.startsWith("contract=") || f.getName.endsWith(".parquet"))
-    }
-
   /** Crash windows of the two-move swap (ADVICE r3 — the old behavior
     * either threw forever on the leftover or, worse, a blind pre-clean
     * would have silently destroyed the only surviving copy):
@@ -165,7 +168,7 @@ object PosixSwapCommit extends StoreCommitProtocol {
     val p = Paths.get(path)
     val po = Paths.get(path + ".compact.old")
     if (Files.exists(po)) {
-      if (!hasData(p)) {
+      if (!FsUtil.hasData(p)) {
         if (Files.exists(p)) FsUtil.deleteTree(p)
         Files.move(po, p, StandardCopyOption.ATOMIC_MOVE): Unit
       } else FsUtil.deleteTree(po)

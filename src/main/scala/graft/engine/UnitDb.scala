@@ -73,7 +73,6 @@ final class UnitDb private (
     autoFlushRows: Int,
     encryptionKey: Option[Array[Byte]],
     commitProtocol: StoreCommitProtocol,
-    writeSaltBuckets: Int,
     val secureMode: Boolean,
     cipher: PayloadCipher) {
 
@@ -139,8 +138,8 @@ final class UnitDb private (
   private val seqCounter = new AtomicLong(0L)
   // declared before the recovery block below, which seeds hwmWritten
   @volatile private var hwmWritten = 0L
-  @volatile private var storeExists = hasStore
-  @volatile private var tombsExist = hasTombs
+  @volatile private var storeExists = FsUtil.hasData(Paths.get(dataPath))
+  @volatile private var tombsExist = FsUtil.hasData(Paths.get(tombsPath))
   @volatile private var closed = false
 
   private def ensureOpen(): Unit =
@@ -211,16 +210,8 @@ final class UnitDb private (
     // threshold-triggered flush records its own sync sample — timing it
     // here too would double-count the flush in the shared reservoir
     val (m, needFlush) = timed(putMeter) {
-      val m = toMessage(
-        e.copy(topic = authorize(e.topic, TopicKey.AllowWrite, e.contract)))
-      val need = synchronized {
-        ensureOpen()
-        pending += m
-        nPuts.incrementAndGet()
-        nBytesWritten.addAndGet(if (m.payload == null) 0 else m.payload.length.toLong)
-        pending.size >= autoFlushRows
-      }
-      (m, need)
+      val m = mkMessage(e)
+      (m, buffer(Seq(m), Nil))
     }
     // flush OUTSIDE the buffer lock (lock order: flushLock > monitor)
     if (needFlush) sync()
@@ -236,51 +227,47 @@ final class UnitDb private (
     * grouped face restores the embedded path's throughput). Same
     * durability contract as [[putEntry]] — buffered until [[sync]]. */
   def putEntries(es: Seq[Entry]): Unit = if (es.nonEmpty) {
-    val msgs = es.map(e => toMessage(
-      e.copy(topic = authorize(e.topic, TopicKey.AllowWrite, e.contract))))
-    val bytes = msgs.iterator
-      .map(m => if (m.payload == null) 0L else m.payload.length.toLong).sum
-    val needFlush = timed(putMeter) {
-      synchronized {
-        ensureOpen()
-        pending ++= msgs
-        nPuts.addAndGet(msgs.size.toLong)
-        nBytesWritten.addAndGet(bytes)
-        pending.size >= autoFlushRows
-      }
-    }
-    if (needFlush) sync()
+    val msgs = es.map(mkMessage)
+    if (timed(putMeter)(buffer(msgs, Nil))) sync()
   }
 
   /** Delete one message by seq + topic — appends a sidecar tombstone;
     * readers anti-join it out (reference db.go:392-425 frees the block). */
   def delete(seq: Long, topic: String, contract: Long = Message.MasterContract): Unit =
-    synchronized {
-      ensureOpen()
-      val t = Topic.parse(authorize(topic, TopicKey.AllowWrite, contract))
-      pendingTombs += Tombstone(seq, contract, t.key, new Timestamp(clock()))
-      nDeletes.incrementAndGet(): Unit
-    }
+    buffer(Nil, Seq(mkTombstone(seq, topic, contract))): Unit
 
   /** Delete by 16-byte message ID (reference Delete(id, topic),
     * db.go:392-425): the seq and contract are unpacked from the ID. Note
     * the ID carries only the low 32 contract bits (reference contracts are
     * uint32, message/id.go:28). */
-  def delete(id: Array[Byte], topic: String): Unit = {
-    val (_, contract, seq) = MessageId.decode(id)
-    delete(seq, topic, contract)
-  }
+  def delete(id: Array[Byte], topic: String): Unit =
+    deleteEntry(Entry(topic, Array.emptyByteArray, id = Some(id)))
 
   /** Entry-form delete (reference DeleteEntry, db.go:399-425): the entry
     * must carry its ID; an explicit non-master contract on the entry wins
     * over the ID's truncated low-32 contract bits. */
   def deleteEntry(e: Entry): Unit = {
-    val id = e.id.getOrElse(
-      throw new IllegalArgumentException("deleteEntry requires Entry.id"))
-    val (_, idContract, seq) = MessageId.decode(id)
-    val contract =
-      if (e.contract != Message.MasterContract) e.contract else idContract
+    val (seq, contract) = deleteTarget(e)
     delete(seq, e.topic, contract)
+  }
+
+  /** The one buffer path of every write face: append messages and delete
+    * markers under the monitor and count them. Payload bytes are summed
+    * before the lock so writers hold it only for the appends. Returns
+    * true when the pending rows reached the auto-flush threshold; the
+    * caller flushes OUTSIDE the monitor (lock order: flushLock > monitor). */
+  private def buffer(msgs: Seq[Message], tombs: Seq[Tombstone]): Boolean = {
+    val bytes = msgs.iterator
+      .map(m => if (m.payload == null) 0L else m.payload.length.toLong).sum
+    synchronized {
+      ensureOpen()
+      pendingTombs ++= tombs
+      nDeletes.addAndGet(tombs.size.toLong)
+      pending ++= msgs
+      nPuts.addAndGet(msgs.size.toLong)
+      nBytesWritten.addAndGet(bytes)
+      pending.size >= autoFlushRows
+    }
   }
 
   /** Bulk delete: tombstone EVERY live message matching the query pattern
@@ -315,7 +302,6 @@ final class UnitDb private (
     }
     sync() // pending puts must be visible to the scan (and deletable)
     val (matched, _) = matchedLive(q)
-    nGets.decrementAndGet() // matchedLive counted a read; a sweep is not one
     val obs = org.apache.spark.sql.Observation()
     matched
       .select(col("seq"), col("contract"), col("topic"),
@@ -335,6 +321,7 @@ final class UnitDb private (
     * flush; exception ⇒ abort — except anything already persisted by an
     * explicit mid-batch [[BatchWriter.write]], which survives. */
   def batch(fn: BatchWriter => Unit): Unit = {
+    ensureOpen()
     val b = new BatchWriter(this)
     try fn(b) // throws ⇒ unwritten entries/deletes abort
     catch {
@@ -342,8 +329,7 @@ final class UnitDb private (
         nAborts.incrementAndGet() // reference Varz.Aborts (meter.go:97)
         throw e
     }
-    val (entries, tombs) = b.drain()
-    commitBatch(entries, tombs)
+    b.write()
   }
 
   /** Commit a batch's buffered entries + tombstones in one flush (shared
@@ -351,22 +337,14 @@ final class UnitDb private (
     * comes from [[sync]]'s flush ORDER (tombstones before entries — see
     * the comment there), not buffer insertion order: a split flush can
     * only under-apply the batch, never expose puts without their deletes. */
-  private[engine] def commitBatch(
-      entries: Seq[Message], tombs: Seq[Tombstone] = Nil): Unit =
+  private[engine] def commitBatch(entries: Seq[Message], tombs: Seq[Tombstone]): Unit =
     if (entries.nonEmpty || tombs.nonEmpty) {
-      synchronized {
-        pendingTombs ++= tombs
-        nDeletes.addAndGet(tombs.size.toLong)
-        pending ++= entries
-        nPuts.addAndGet(entries.size.toLong)
-        nBytesWritten.addAndGet(
-          entries.iterator.map(m => if (m.payload == null) 0L else m.payload.length.toLong).sum)
-      }
+      buffer(entries, tombs)
       sync() // the batch's durability point, outside the buffer lock
     }
 
-  /** Build (without buffering) a tombstone — the [[BatchWriter]] delete
-    * hook, sharing the store clock and topic normalization. */
+  /** Build (without buffering) a tombstone, sharing the store clock and
+    * topic normalization. */
   private[engine] def mkTombstone(seq: Long, topic: String, contract: Long): Tombstone =
     Tombstone(seq, contract,
       Topic.parse(authorize(topic, TopicKey.AllowWrite, contract)).key,
@@ -432,12 +410,10 @@ final class UnitDb private (
     * composable with further Spark ops. Newest-first, clamped at the
     * reference's Default/MaxLimit (options.go:169-174). */
   def getFrame(q: Query): DataFrame = {
-    val (matched, limit) = matchedLive(
-      q.copy(topic = authorize(q.topic, TopicKey.AllowRead, q.contract)))
-    matched
-      .orderBy(col("ts").desc, col("seq").desc)
-      .limit(limit)
-      .select("seq", "topic", "ts", "payload")
+    val (matched, lastCount) = matchedLive(readQuery(q))
+    newestFirst(matched,
+      lastCount.map(c => math.min(c, Query.MaxLimit)).getOrElse(q.effectiveLimit))
+      .select(ReadColumns: _*)
   }
 
   /** The FULL matching live set as a DataFrame, with no result-count clamp
@@ -448,16 +424,9 @@ final class UnitDb private (
     * not be silently truncated at 100k rows (r3 VERDICT #4). A `?last=N`
     * count in the pattern is still honored — that is an explicit request
     * — via the newest-first top-N. */
-  def scanFrame(q0: Query): DataFrame = {
-    val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val (matched, _) = matchedLive(q)
-    Topic.parse(q.topic).last match {
-      case Some(Left(count)) =>
-        matched.orderBy(col("ts").desc, col("seq").desc).limit(count)
-          .select("seq", "topic", "ts", "payload")
-      case _ =>
-        matched.select("seq", "topic", "ts", "payload")
-    }
+  def scanFrame(q: Query): DataFrame = {
+    val (matched, lastCount) = matchedLive(readQuery(q))
+    lastCount.fold(matched)(newestFirst(matched, _)).select(ReadColumns: _*)
   }
 
   /** Typed face of the batch scan (SURVEY §1.4: `Dataset[Message]` as the
@@ -468,18 +437,11 @@ final class UnitDb private (
     * so downstream pipelines compose with lambdas and pattern matches
     * under compile-time checking while staying whole-stage-codegen'd
     * (product encoder, no Kryo). */
-  def scanTyped(q0: Query): org.apache.spark.sql.Dataset[Message] = {
-    val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val (matched, _) = matchedLive(q)
-    val fields = Seq("seq", "contract", "topic", "topic_parts",
-      "is_wildcard", "is_multi", "depth", "ts", "expires_at", "encrypted",
-      "payload")
-    val base = Topic.parse(q.topic).last match {
-      case Some(Left(count)) =>
-        matched.orderBy(col("ts").desc, col("seq").desc).limit(count)
-      case _ => matched
-    }
-    base.select(fields.map(col): _*).as(Encoders.product[Message])
+  def scanTyped(q: Query): org.apache.spark.sql.Dataset[Message] = {
+    val (matched, lastCount) = matchedLive(readQuery(q))
+    lastCount.fold(matched)(newestFirst(matched, _))
+      .select(("seq" +: Message.columnsAfterSeq).map(col): _*)
+      .as(Encoders.product[Message])
   }
 
   /** The store as a STREAMING SOURCE — the continuous face of S3 RELAY
@@ -507,9 +469,7 @@ final class UnitDb private (
     * bounds each micro-batch for backfill-sized stores. Partition-dir
     * pruning on `(contract, wc, day)` applies as in the batch scan. */
   def tail(q0: Query, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    ensureOpen()
-    nGets.incrementAndGet()
-    val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
+    val q = readQuery(q0)
     val t = Topic.parse(q.topic)
     val cutoffMs = t.last match {
       case Some(Right(durMs)) => Some(clock() - durMs)
@@ -522,49 +482,48 @@ final class UnitDb private (
     maxFilesPerTrigger.foreach(n =>
       reader = reader.option("maxFilesPerTrigger", n.toString))
     val src = decrypt(reader.option("basePath", dataPath).parquet(dataPath))
-    var pred: Column = col("contract") === q.contract &&
-      (col("expires_at").isNull || col("expires_at") > current_timestamp())
-    cutoffMs.foreach { c =>
-      pred = pred && col("ts") >= lit(new Timestamp(c)) &&
-        col("day") >= lit(dayOf(c, sessionZone))
-    }
-    val matched =
-      if (!t.isWildcard)
-        src.filter(col("wc") === 0 && col("topic") === t.key && pred)
-          .unionByName(
-            src.filter(col("wc") === 1 &&
-              TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred))
-      else
-        src.filter(
-          TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred)
-    matched
-      .join(broadcast(tombstonesFor(q.contract)), Seq("seq", "topic"), "left_anti")
-      .select("seq", "topic", "ts", "payload")
+    matchLive(src, t, q.contract, current_timestamp(), cutoffMs)
+      .select(ReadColumns: _*)
   }
 
-  /** Shared core of [[getFrame]]/[[scanFrame]]: the pattern-matched,
-    * contract-scoped, live (not expired, not tombstoned) row set plus the
-    * clamped result limit for the interactive path. */
-  private def matchedLive(q: Query): (DataFrame, Int) = {
+  /** Entry of every read face: fence a closed store, authorize the
+    * pattern for read, and count the read once. */
+  private def readQuery(q: Query): Query = {
+    val authorized = q.copy(topic = authorize(q.topic, TopicKey.AllowRead, q.contract))
     ensureOpen()
     nGets.incrementAndGet()
+    authorized
+  }
+
+  /** Shared core of the batch read faces and [[deleteMatching]]: the
+    * pattern-matched, contract-scoped, live row set over [[snapshot]] at
+    * the store clock, plus the `?last=<count>`, if any
+    * (reference query.go:72-88, message/topic.go:119-133). */
+  private def matchedLive(q: Query): (DataFrame, Option[Int]) = {
     val t = Topic.parse(q.topic)
     val nowMs = clock()
-
-    // ?last= : duration ⇒ time cutoff; integer ⇒ result-count limit
-    // (reference query.go:72-88, message/topic.go:119-133)
     val (cutoffMs, lastCount) = t.last match {
       case Some(Right(durMs)) => (Some(nowMs - durMs), None)
       case Some(Left(count))  => (None, Some(count))
       case None               => (None, None)
     }
-    val limit = lastCount
-      .map(c => math.min(c, Query.MaxLimit))
-      .getOrElse(q.effectiveLimit)
+    (matchLive(snapshot(), t, q.contract, lit(new Timestamp(nowMs)), cutoffMs),
+      lastCount)
+  }
 
-    var pred: Column =
-      col("contract") === q.contract &&
-      (col("expires_at").isNull || col("expires_at") > lit(new Timestamp(nowMs)))
+  /** The one place a read plan is made, batch and streaming alike: rows
+    * of `src` under `contract`, not expired at `now`, at or after the
+    * optional cutoff, matching `t`, and not tombstoned.
+    *
+    * Static patterns: pushable equality over the static bucket, unioned
+    * with a bidirectional match over the (tiny) wildcard bucket — stored
+    * wildcard publishes still answer static queries (SURVEY §2.3 rule 1).
+    * Matching runs over the stored topic_parts/is_multi columns (parsed
+    * once at write) — no per-row string parse, no pattern-cache pressure
+    * at any topic cardinality. */
+  private def matchLive(src: DataFrame, t: Topic, contract: Long, now: Column,
+      cutoffMs: Option[Long]): DataFrame = {
+    var pred: Column = col("contract") === contract && notExpired(now)
     cutoffMs.foreach { c =>
       // partition pruning on the day column: the cutoff day must be computed
       // in the SAME zone that derived the stored `day` strings (the session
@@ -573,39 +532,36 @@ final class UnitDb private (
       pred = pred && col("ts") >= lit(new Timestamp(c)) &&
         col("day") >= lit(dayOf(c, sessionZone))
     }
-
-    val snap = snapshot()
-    // Static patterns: pushable equality over the static bucket, unioned
-    // with a bidirectional match over the (tiny) wildcard bucket — stored
-    // wildcard publishes still answer static queries (SURVEY §2.3 rule 1).
-    // Matching runs over the stored topic_parts/is_multi columns (parsed
-    // once at write) — no per-row string parse, no pattern-cache pressure
-    // at any topic cardinality.
+    val wildcardMatch = TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key)
     val matched =
       if (!t.isWildcard)
-        snap.filter(col("wc") === 0 && col("topic") === t.key && pred)
-          .unionByName(
-            snap.filter(col("wc") === 1 &&
-              TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred))
-      else
-        snap.filter(
-          TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred)
-
-    (matched
-      .join(broadcast(tombstonesFor(q.contract)), Seq("seq", "topic"), "left_anti"),
-      limit)
+        src.filter(col("wc") === 0 && col("topic") === t.key && pred)
+          .unionByName(src.filter(col("wc") === 1 && wildcardMatch && pred))
+      else src.filter(wildcardMatch && pred)
+    withoutTombstones(matched, tombstonesFor(contract))
   }
+
+  /** TTL liveness at `now` (reference isExpired, time_window.go:63-65). */
+  private def notExpired(now: Column): Column =
+    col("expires_at").isNull || col("expires_at") > now
+
+  /** Anti-join the (seq, topic) delete markers, broadcast. */
+  private def withoutTombstones(rows: DataFrame, tombs: DataFrame): DataFrame =
+    rows.join(broadcast(tombs), Seq("seq", "topic"), "left_anti")
+
+  /** `?last=N` / the interactive limit: the N newest rows (ts, then seq). */
+  private def newestFirst(rows: DataFrame, n: Int): DataFrame =
+    rows.orderBy(col("ts").desc, col("seq").desc).limit(n)
 
   /** Live-entry count (reference db.go:475-478). */
-  def count(): Long = {
-    snapshot()
-      .filter(col("expires_at").isNull || col("expires_at") > lit(new Timestamp(clock())))
-      .join(broadcast(tombstonesFor()), Seq("seq", "topic"), "left_anti")
-      .count()
-  }
+  def count(): Long =
+    withoutTombstones(snapshot().filter(notExpired(lit(new Timestamp(clock())))),
+      tombstonesFor()).count()
 
   /** Flush and close (reference DB.Close, db.go:213-219): pending writes
-    * are synced, then every further operation throws. Idempotent.
+    * are synced, then every further read, write and maintenance face
+    * throws `IllegalStateException`; `varz`, `fileSize` and `sync` stay
+    * callable. Idempotent.
     *
     * Order matters: the flag flips BEFORE the final sync, under the same
     * monitor the put path appends under — a put racing this close either
@@ -636,6 +592,7 @@ final class UnitDb private (
     * colliding with freshly assigned seqs (ADVICE r3: recovery from
     * max(stored seq) alone would re-issue it). */
   def newID(): Array[Byte] = {
+    ensureOpen()
     val seq = seqCounter.incrementAndGet()
     persistSeqHwm(seq)
     MessageId.encode(clock() / 1000, Message.MasterContract, seq)
@@ -684,21 +641,43 @@ final class UnitDb private (
     * a key is present, and the `day`/`wc` partition columns retained for
     * pruning. Tombstoned rows are NOT removed here — callers anti-join
     * [[tombstonesFor]] (get/count do). */
-  def snapshot(): DataFrame = seqlockRead {
-    val pendingDf = synchronized {
-      val rows = (flushing ++ pending).toSeq
-      if (rows.isEmpty) None
-      else Some(withDerived(
-        spark.createDataset(rows)(Encoders.product[Message]).toDF()))
-    }
-    val store = if (storeExists) Some(decrypt(readStoreRaw())) else None
-    (store, pendingDf) match {
-      case (Some(s), Some(p)) => s.unionByName(p)
-      case (Some(s), None)    => s
-      case (None, Some(p))    => p
-      case (None, None) =>
+  def snapshot(): DataFrame =
+    durableAndBuffered(storeSchema)(
+      durable = if (storeExists) Some(decrypt(readStoreRaw())) else None,
+      buffered = flushing ++ pending)(
+      rows => withDerived(spark.createDataset(rows)(Encoders.product[Message]).toDF()))
+
+  /** Delete markers visible to a reader as (seq, topic) pairs: sidecar ∪
+    * unsynced, pruned by contract. Readers anti-join on BOTH keys — a
+    * delete whose topic does not match the stored message is a no-op, as
+    * in the reference (Delete validates the topic before freeing the
+    * block, db.go:392-425; ADVICE r2). The sidecar is orders smaller than
+    * the store, so the anti-join side stays broadcast-able even on
+    * delete-heavy stores (VERDICT r1 #2). */
+  def tombstonesFor(contract: Long = -1L): DataFrame = {
+    val all = durableAndBuffered(tombSchema)(
+      durable = if (tombsExist) Some(readTombs()) else None,
+      buffered = flushingTombs ++ pendingTombs)(
+      rows => spark.createDataset(rows)(Encoders.product[Tombstone]).toDF())
+    val pruned = if (contract >= 0) all.filter(col("contract") === contract) else all
+    pruned.select("seq", "topic").distinct()
+  }
+
+  /** Durable ∪ buffered rows, captured consistently (see [[seqlockRead]]):
+    * the durable frame, unioned with the in-flight and pending buffer rows
+    * when there are any, else an empty frame of `schema`. */
+  private def durableAndBuffered[T](schema: org.apache.spark.sql.types.StructType)(
+      durable: => Option[DataFrame], buffered: => ArrayBuffer[T])(
+      toFrame: Seq[T] => DataFrame): DataFrame = {
+    ensureOpen()
+    seqlockRead {
+      val pendingDf = synchronized {
+        val rows = buffered.toSeq
+        if (rows.isEmpty) None else Some(toFrame(rows))
+      }
+      (durable ++ pendingDf).reduceOption(_ unionByName _).getOrElse(
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchema)
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     }
   }
 
@@ -713,32 +692,6 @@ final class UnitDb private (
       if (visEpoch.get() == e1) return out
     }
     flushLock.synchronized(capture)
-  }
-
-  /** Delete markers visible to a reader as (seq, topic) pairs: sidecar ∪
-    * unsynced, pruned by contract. Readers anti-join on BOTH keys — a
-    * delete whose topic does not match the stored message is a no-op, as
-    * in the reference (Delete validates the topic before freeing the
-    * block, db.go:392-425; ADVICE r2). The sidecar is orders smaller than
-    * the store, so the anti-join side stays broadcast-able even on
-    * delete-heavy stores (VERDICT r1 #2). */
-  def tombstonesFor(contract: Long = -1L): DataFrame = seqlockRead {
-    val pendingDf = synchronized {
-      val rows = (flushingTombs ++ pendingTombs).toSeq
-      if (rows.isEmpty) None
-      else Some(spark.createDataset(rows)(Encoders.product[Tombstone]).toDF())
-    }
-    val sidecar = if (tombsExist) Some(readTombs()) else None
-    val all = (sidecar, pendingDf) match {
-      case (Some(s), Some(p)) => s.unionByName(p)
-      case (Some(s), None)    => s
-      case (None, Some(p))    => p
-      case (None, None) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
-    }
-    val pruned = if (contract >= 0) all.filter(col("contract") === contract) else all
-    pruned.select("seq", "topic").distinct()
   }
 
   // ---------------------------------------------------------- maintenance
@@ -762,44 +715,14 @@ final class UnitDb private (
   /** Compaction with an optional retention horizon (reference maxRetention
     * = 28 days, db_internal.go:54): rows with `ts` older than
     * now - retentionMs are dropped with the expired ones. */
-  def vacuum(retentionMs: Option[Long]): Unit = flushLock.synchronized {
-    ensureOpen()
-    sync()
-    if (!storeExists) return
+  def vacuum(retentionMs: Option[Long]): Unit = onSyncedStore(()) {
     val nowTs = clock()
-    var livePred: Column =
-      col("expires_at").isNull || col("expires_at") > lit(new Timestamp(nowTs))
+    var keep = notExpired(lit(new Timestamp(nowTs)))
     retentionMs.foreach { r =>
-      livePred = livePred && col("ts") >= lit(new Timestamp(nowTs - r))
+      keep = keep && col("ts") >= lit(new Timestamp(nowTs - r))
     }
-    val live = readStoreRaw()
-      .filter(livePred)
-      .join(broadcast(tombstonesFor()), Seq("seq", "topic"), "left_anti")
-    val tmp = commitProtocol.rewriteTarget(path)
-    writeStoreTo(live, tmp)
-    // every `_` sidecar except the consumed tombstones (and write-staging
-    // artifacts, and the protocol's own bookkeeping) survives the commit
-    val preserved = Option(Paths.get(path).toFile.listFiles)
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("_") &&
-        f.getName != "_tombstones" && f.getName != "_temporary" &&
-        f.getName != "_gen" && f.getName != "_manifest")
-      .map(_.getName).toSeq
-    // the swap (and the consumed-tombstone drop) flips visibility — mark
-    // the span so optimistic readers retry under flushLock instead of
-    // listing a half-moved store
-    enterDiskMutation()
-    try {
-      commitProtocol.commitRewrite(path, tmp, preserved)
-      // the tombstones were consumed by the rewrite. A swap protocol
-      // dropped the sidecar with the old directory; a manifest commit
-      // never touches sidecars, so remove it here (a crash before this
-      // point just leaves stale tombstones whose anti-join matches
-      // nothing — idempotent)
-      val tp = Paths.get(tombsPath)
-      if (Files.exists(tp)) FsUtil.deleteTree(tp)
-      tombsExist = false
-    } finally exitDiskMutation()
+    val live = withoutTombstones(readStoreRaw().filter(keep), tombstonesFor())
+    rewrite(consumeTombstones = true)(tmp => writeStoreTo(live, tmp))
   }
 
   /** Small-file compaction — the streaming-ingest pathology at scale:
@@ -824,66 +747,92 @@ final class UnitDb private (
     * predicate is applied and the `_tombstones` sidecar is preserved, not
     * consumed — reads return byte-identical results before and after. The
     * commit rides the same [[StoreCommitProtocol]] swap as vacuum (same
-    * staging names, same crash recovery at open). Single-file-per-
-    * partition is deliberate even for salted stores: compaction is where
-    * the salt's extra files get folded back together. Returns the number
-    * of partitions compacted. */
-  def compact(minFiles: Int = 8): Int = flushLock.synchronized {
-    ensureOpen()
+    * staging names, same crash recovery at open). Returns the number of
+    * partitions compacted. */
+  def compact(minFiles: Int = 8): Int = {
     require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
+    onSyncedStore(0) {
+      val liveDir = Paths.get(dataPath)
+      val hot = ArrayBuffer[Path]()
+      val walk = Files.walk(liveDir)
+      try walk.forEach { p =>
+        // `_` sidecar subtrees (e.g. _tombstones) are commit-preserved, not
+        // store data: skip them here like the cold carry-over walk does, so
+        // a future day-partitioned sidecar can't be folded into the table
+        val underSidecar = p != liveDir &&
+          liveDir.relativize(p).getName(0).toString.startsWith("_")
+        if (!underSidecar &&
+            Files.isDirectory(p) && p.getFileName.toString.startsWith("day=")) {
+          val fs = p.toFile.listFiles
+          if (fs != null &&
+              fs.count(f => f.isFile && f.getName.endsWith(".parquet")) >= minFiles)
+            hot += p
+        }
+      } finally walk.close()
+      if (hot.nonEmpty) rewrite(consumeTombstones = false) { tmp =>
+        // hot partitions only, partition columns derived via basePath; the
+        // repartition puts each (contract, wc, day) in exactly one writer
+        // task → exactly one compacted file per partition
+        val hotRows = spark.read.option("basePath", liveDir.toString)
+          .schema(UnitDb.storeSchema).parquet(hot.map(_.toString).toSeq: _*)
+        writeStoreTo(hotRows.repartition(col("contract"), col("wc"), col("day")), tmp)
+        // cold data files carry over untouched (never under a `_` sidecar —
+        // those are the commit's preserved set)
+        val hotSet = hot.map(_.toString).toSet
+        val walk2 = Files.walk(liveDir)
+        try walk2.forEach { p =>
+          val name = p.getFileName.toString
+          if (Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".") &&
+              !hotSet.contains(p.getParent.toString)) {
+            val rel = liveDir.relativize(p)
+            if (!rel.getName(0).toString.startsWith("_"))
+              FsUtil.linkOrCopy(p, Paths.get(tmp).resolve(rel))
+          }
+        } finally walk2.close()
+      }
+      hot.size
+    }
+  }
+
+  /** Maintenance preamble: under the writer lock, fence a closed store and
+    * flush the buffers; run `body` only when the store has data. */
+  private def onSyncedStore[T](ifEmpty: T)(body: => T): T = flushLock.synchronized {
+    ensureOpen()
     sync()
-    if (!storeExists) return 0
-    val liveDir = Paths.get(dataPath)
-    val hot = ArrayBuffer[Path]()
-    val walk = Files.walk(liveDir)
-    try walk.forEach { p =>
-      // `_` sidecar subtrees (e.g. _tombstones) are commit-preserved, not
-      // store data: skip them here like the cold carry-over walk does, so
-      // a future day-partitioned sidecar can't be folded into the table
-      val underSidecar = p != liveDir &&
-        liveDir.relativize(p).getName(0).toString.startsWith("_")
-      if (!underSidecar &&
-          Files.isDirectory(p) && p.getFileName.toString.startsWith("day=")) {
-        val fs = p.toFile.listFiles
-        if (fs != null &&
-            fs.count(f => f.isFile && f.getName.endsWith(".parquet")) >= minFiles)
-          hot += p
-      }
-    } finally walk.close()
-    if (hot.isEmpty) return 0
+    if (storeExists) body else ifEmpty
+  }
+
+  /** The one store rewrite behind [[vacuum]] and [[compact]]: `stage`
+    * writes the new store into the protocol's rewrite target, then the
+    * commit swaps it in, carrying every `_` sidecar across (write-staging
+    * artifacts and the protocol's own bookkeeping excepted). A rewrite
+    * that `consumeTombstones` (vacuum) drops the `_tombstones` sidecar;
+    * a layout-only one (compact) preserves it. */
+  private def rewrite(consumeTombstones: Boolean)(stage: String => Unit): Unit = {
     val tmp = commitProtocol.rewriteTarget(path)
-    // hot partitions only, partition columns derived via basePath; the
-    // repartition puts each (contract, wc, day) in exactly one writer
-    // task → exactly one compacted file per partition
-    val hotRows = spark.read.option("basePath", liveDir.toString)
-      .schema(UnitDb.storeSchema).parquet(hot.map(_.toString).toSeq: _*)
-    configureWriter(hotRows
-        .repartition(col("contract"), col("wc"), col("day"))
-        .sortWithinPartitions("topic", "ts")
-        .write.mode(SaveMode.Overwrite)).parquet(tmp)
-    // cold data files carry over untouched (never under a `_` sidecar —
-    // those are the commit's preserved set below)
-    val hotSet = hot.map(_.toString).toSet
-    val walk2 = Files.walk(liveDir)
-    try walk2.forEach { p =>
-      val name = p.getFileName.toString
-      if (Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".") &&
-          !hotSet.contains(p.getParent.toString)) {
-        val rel = liveDir.relativize(p)
-        if (!rel.getName(0).toString.startsWith("_"))
-          FsUtil.linkOrCopy(p, Paths.get(tmp).resolve(rel))
-      }
-    } finally walk2.close()
-    // layout-only rewrite: EVERY sidecar survives, including _tombstones
+    stage(tmp)
+    val notCarried = Set("_temporary", "_gen", "_manifest") ++
+      (if (consumeTombstones) Set("_tombstones") else Set.empty)
     val preserved = Option(Paths.get(path).toFile.listFiles)
       .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("_") &&
-        f.getName != "_temporary" && f.getName != "_gen" && f.getName != "_manifest")
+      .filter(f => f.isDirectory && f.getName.startsWith("_") && !notCarried(f.getName))
       .map(_.getName).toSeq
+    // the swap (and the consumed-tombstone drop) flips visibility — mark
+    // the span so optimistic readers retry under flushLock instead of
+    // listing a half-moved store
     enterDiskMutation()
-    try commitProtocol.commitRewrite(path, tmp, preserved)
-    finally exitDiskMutation()
-    hot.size
+    try {
+      commitProtocol.commitRewrite(path, tmp, preserved)
+      if (consumeTombstones) {
+        // a swap protocol dropped the sidecar with the old directory; a
+        // manifest commit never touches sidecars, so remove it here (a
+        // crash before this point just leaves stale tombstones whose
+        // anti-join matches nothing — idempotent)
+        val tp = Paths.get(tombsPath)
+        if (Files.exists(tp)) FsUtil.deleteTree(tp)
+        tombsExist = false
+      }
+    } finally exitDiskMutation()
   }
 
   // ------------------------------------------------------------ internals
@@ -1032,38 +981,19 @@ final class UnitDb private (
     case None => df
   }
 
-  /** One file per (contract, wc, day) per sync (writeSaltBuckets = 1):
-    * repartitioning on the partition columns before the partitioned write
-    * prevents the every-input-task-writes-every-partition small-files
-    * explosion (a 1000-task batch over 30 days would otherwise cut 30k
-    * files). Sorting by (topic, ts) inside each file keeps row-group
-    * stats selective.
-    *
-    * At extreme skew (one day = most of a huge batch) a single-bucket
-    * repartition serializes that day into one writer task — opening the
-    * store with `writeSaltBuckets` = k splits every (contract, wc, day)
-    * across k deterministic seq-keyed buckets: the hot day writes from k
-    * tasks at the price of ≤ k files per partition per sync. Readers are
-    * unaffected (the salt is a shuffle key, never a stored column). */
-  private def writeStore(df: DataFrame): Unit = {
-    val prepared = encrypt(withDerived(df))
-    val shuffled =
-      if (writeSaltBuckets > 1)
-        // explicit partition count: AQE would otherwise coalesce the
-        // salted splits of a small sync back into one task, defeating
-        // the salt exactly when testing it (it respects user-specified
-        // counts; at real hot-day sizes it wouldn't coalesce anyway)
-        prepared.repartition(spark.sessionState.conf.numShufflePartitions,
-          col("contract"), col("wc"), col("day"),
-          pmod(col("seq"), lit(writeSaltBuckets)))
-      else
-        prepared.repartition(col("contract"), col("wc"), col("day"))
-    configureWriter(
-      shuffled.sortWithinPartitions("topic", "ts")
-        .write.mode(SaveMode.Append)).parquet(dataPath)
-  }
+  /** One file per (contract, wc, day) per sync: repartitioning on the
+    * partition columns before the partitioned write prevents the
+    * every-input-task-writes-every-partition small-files explosion (a
+    * 1000-task batch over 30 days would otherwise cut 30k files). Sorting
+    * by (topic, ts) inside each file keeps row-group stats selective. */
+  private def writeStore(df: DataFrame): Unit =
+    configureWriter(encrypt(withDerived(df))
+      .repartition(col("contract"), col("wc"), col("day"))
+      .sortWithinPartitions("topic", "ts")
+      .write.mode(SaveMode.Append)).parquet(dataPath)
 
-  /** Vacuum rewrite — rows are already in at-rest form (no crypto pass). */
+  /** Rewrite target (vacuum/compact) — rows are already in at-rest form
+    * (no crypto pass). */
   private def writeStoreTo(df: DataFrame, target: String): Unit =
     configureWriter(df.sortWithinPartitions("topic", "ts")
       .write.mode(SaveMode.Overwrite)).parquet(target)
@@ -1131,22 +1061,6 @@ final class UnitDb private (
 
   private def readTombs(): DataFrame =
     spark.read.schema(tombSchema).parquet(tombsPath)
-
-  private def hasStore: Boolean = {
-    val f = Paths.get(dataPath)
-    Files.exists(f) && Files.isDirectory(f) &&
-      f.toFile.listFiles != null && f.toFile.listFiles.exists { d =>
-        d.getName.startsWith("contract=") || d.getName.endsWith(".parquet")
-      }
-  }
-
-  private def hasTombs: Boolean = {
-    val f = Paths.get(tombsPath)
-    Files.exists(f) && Files.isDirectory(f) &&
-      f.toFile.listFiles != null && f.toFile.listFiles.exists { d =>
-        d.getName.startsWith("contract=") || d.getName.endsWith(".parquet")
-      }
-  }
 }
 
 object UnitDb {
@@ -1184,11 +1098,8 @@ object UnitDb {
 
   /** Open (or create) a store directory (reference db.go:50-210).
     * `encryptionKey` (16/24/32 bytes) enables per-entry at-rest encryption
-    * (reference WithEncryption, options.go). `writeSaltBuckets` > 1
-    * splits each (contract, wc, day) write partition across that many
-    * seq-keyed writer tasks — for ingest where one hot day dominates a
-    * sync (see `writeStore`); the default writes one file per partition
-    * per sync. */
+    * (reference WithEncryption, options.go). Each sync writes one file per
+    * (contract, wc, day) partition (see `writeStore`). */
   def open(
       spark: SparkSession,
       path: String,
@@ -1196,7 +1107,6 @@ object UnitDb {
       autoFlushRows: Int = 100000,
       encryptionKey: Option[Array[Byte]] = None,
       commitProtocol: StoreCommitProtocol = PosixSwapCommit,
-      writeSaltBuckets: Int = 1,
       secureMode: Boolean = false,
       cipher: PayloadCipher = AesGcm): UnitDb = {
     encryptionKey.foreach(k => cipher match {
@@ -1205,7 +1115,6 @@ object UnitDb {
       case ChaCha20Poly1305 => require(k.length == 32,
         s"ChaCha20-Poly1305 key must be 32 bytes, got ${k.length}")
     })
-    require(writeSaltBuckets >= 1, s"writeSaltBuckets must be >= 1")
     TopicMatches.register(spark)
     // repair any crash leftovers of an interrupted vacuum commit BEFORE
     // creating/reading anything — a crash between the swap protocol's two
@@ -1214,24 +1123,31 @@ object UnitDb {
     val repaired = commitProtocol.recover(path)
     Files.createDirectories(Paths.get(path))
     val db = new UnitDb(spark, path, clock, autoFlushRows, encryptionKey,
-      commitProtocol, writeSaltBuckets, secureMode, cipher)
+      commitProtocol, secureMode, cipher)
     db.recoveredAtOpen = repaired
     db
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val kids = f.listFiles
-      if (kids != null) kids.foreach(deleteRecursively)
-    }
-    f.delete(): Unit
+  /** The columns every DataFrame read face returns. */
+  private val ReadColumns: Seq[Column] = Seq("seq", "topic", "ts", "payload").map(col)
+
+  /** The (seq, contract) an ID-based delete targets (reference
+    * Delete/DeleteEntry, db.go:392-425): the entry must carry its ID; an
+    * explicit non-master contract on the entry wins over the ID's
+    * truncated low-32 contract bits (reference contracts are uint32,
+    * message/id.go:28). */
+  private[engine] def deleteTarget(e: Entry): (Long, Long) = {
+    val id = e.id.getOrElse(
+      throw new IllegalArgumentException("deleteEntry requires Entry.id"))
+    val (_, idContract, seq) = MessageId.decode(id)
+    (seq, if (e.contract != Message.MasterContract) e.contract else idContract)
   }
 }
 
 /** Buffered writer handed to [[UnitDb.batch]] (reference batch.go:64-257). */
 final class BatchWriter private[engine] (db: UnitDb) {
-  private[engine] val entries = ArrayBuffer[Message]()
-  private[engine] val tombs = ArrayBuffer[Tombstone]()
+  private val entries = ArrayBuffer[Message]()
+  private val tombs = ArrayBuffer[Tombstone]()
   private var batchContract: Option[Long] = None
   private var batchTtl: Option[Long] = None
   private var batchEncrypt: Boolean = false
@@ -1272,21 +1188,15 @@ final class BatchWriter private[engine] (db: UnitDb) {
 
   /** Batched delete by 16-byte message ID (reference batch.Delete). The
     * batch contract option dominates, as it does for puts. */
-  def delete(id: Array[Byte], topic: String): Unit = {
-    val (_, contract, seq) = MessageId.decode(id)
-    tombs += db.mkTombstone(seq, topic, batchContract.getOrElse(contract))
-  }
+  def delete(id: Array[Byte], topic: String): Unit =
+    deleteEntry(Entry(topic, Array.emptyByteArray, id = Some(id)))
 
   /** Batched Entry-form delete (reference batch.DeleteEntry,
     * batch.go:115-120) — same contract-resolution rule as
     * [[UnitDb.deleteEntry]], under the batch option. */
   def deleteEntry(e: Entry): Unit = {
-    val id = e.id.getOrElse(
-      throw new IllegalArgumentException("deleteEntry requires Entry.id"))
-    val (_, idContract, seq) = MessageId.decode(id)
-    val contract =
-      if (e.contract != Message.MasterContract) e.contract else idContract
-    tombs += db.mkTombstone(seq, e.topic, batchContract.getOrElse(contract))
+    val (seq, contract) = UnitDb.deleteTarget(e)
+    delete(seq, e.topic, contract)
   }
 
   /** Mid-batch flush (reference batch.Write, batch.go:158-193): persist
@@ -1294,14 +1204,9 @@ final class BatchWriter private[engine] (db: UnitDb) {
     * entries/deletes survive even if the closure later throws — only
     * what is still buffered at the abort is discarded. */
   def write(): Unit = {
-    val (es, ts) = drain()
-    db.commitBatch(es, ts)
-  }
-
-  private[engine] def drain(): (Seq[Message], Seq[Tombstone]) = {
-    val out = (entries.toSeq, tombs.toSeq)
+    val (es, ts) = (entries.toSeq, tombs.toSeq)
     entries.clear()
     tombs.clear()
-    out
+    db.commitBatch(es, ts)
   }
 }

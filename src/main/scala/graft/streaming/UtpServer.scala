@@ -217,10 +217,23 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
     if (flushBusy.compareAndSet(false, true))
       flusher.submit(new Runnable {
         def run(): Unit =
-          try db.sync()
-          catch { case _: Exception => () }
-          finally flushBusy.set(false)
+          try syncLoudly("background") finally flushBusy.set(false)
       }): Unit
+
+  /** Syncs that threw. The rows stay buffered for the next sync, but
+    * nothing is becoming durable — so each failure is counted, reported
+    * by `varz` as `sync_failures`, and printed to stderr. */
+  private val syncFailures = new AtomicLong(0)
+
+  /** Sync the store; on failure count and print it, and return it. */
+  private def syncLoudly(where: String): Option[Exception] =
+    try { db.sync(); None }
+    catch {
+      case e: Exception =>
+        val n = syncFailures.incrementAndGet()
+        System.err.println(s"utp-server $actualPort: $where sync failed (failure #$n): $e")
+        Some(e)
+    }
 
   /** Bound port (useful with port = 0 / ephemeral). */
   def actualPort: Int = server.getLocalPort
@@ -522,7 +535,7 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
       batchers.remove(conn)
       batchOpts.remove(conn)
       Option(tickerTasks.remove(conn)).foreach(_.cancel(false))
-      try db.sync() catch { case _: Exception => }
+      syncLoudly("connection-close"): Unit
       try conn.sock.close() catch { case _: Exception => }
     }
   }
@@ -718,6 +731,7 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
           s""""bytes_written":${v.bytesWritten},"bytes_read":${v.bytesRead},""" +
           s""""file_size":${v.fileSize},"aborts":${v.aborts},""" +
           s""""recovers":${v.recovers},""" +
+          s""""sync_failures":${syncFailures.get},""" +
           s""""wire":{"connections":$wireConns,""" +
           s""""inflight_bytes":$wireInflight,""" +
           s""""inflight_conn_max_bytes":$wireInflightMax},""" +
@@ -730,6 +744,9 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
     resp.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
+  /** Stop the listeners, drain the flusher, then run a final sync. A
+    * failure of that sync is rethrown: the buffered rows never became
+    * durable. */
   def close(): Unit = {
     running.set(false)
     try server.close() catch { case _: Exception => }
@@ -740,6 +757,6 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
     flusher.shutdown()
     try flusher.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
     catch { case _: InterruptedException => () }
-    try db.sync() catch { case _: Exception => }
+    syncLoudly("final").foreach(e => throw e)
   }
 }

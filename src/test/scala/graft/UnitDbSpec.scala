@@ -226,25 +226,6 @@ class UnitDbSpec extends SparkSpec {
     ()
   }
 
-  test("writeSaltBuckets fans a hot day across multiple files; reads unchanged") {
-    import java.nio.file.Paths
-    val dir = Files.createTempDirectory("graftdb_salt").toString + "/store"
-    val now = 1700000000000L // all puts land on ONE (contract, wc, day)
-    val db = UnitDb.open(spark, dir, clock = () => now, writeSaltBuckets = 4)
-    for (i <- 1 to 200) db.put("salt.t", s"v$i".getBytes)
-    db.sync()
-    val dayDir = Paths.get(dir).toFile.listFiles
-      .find(_.getName.startsWith("contract=")).get
-      .listFiles.find(_.getName.startsWith("wc=")).get
-      .listFiles.find(_.getName.startsWith("day=")).get
-    val files = dayDir.listFiles.count(_.getName.endsWith(".parquet"))
-    assert(files > 1 && files <= 4,
-      s"hot day should write from up to 4 tasks, got $files files")
-    // the salt is a shuffle key, not a stored column: full read-back intact
-    assert(db.get(Query("salt.t")).map(new String(_)).toSet ==
-      (1 to 200).map(i => s"v$i").toSet)
-  }
-
   test("open repairs a vacuum crash between the swap moves (recover)") {
     import java.nio.file.{Paths, StandardCopyOption}
     val dir = Files.createTempDirectory("graftdb_crash").toString + "/store"
@@ -495,6 +476,45 @@ class UnitDbSpec extends SparkSpec {
     assert(planLast.contains("(day"), s"day pruning missing:\n$planLast")
   }
 
+  test("get plan shape per benchmark pattern, with and without tombstones") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val (db, _, tick) = freshDb()
+    for (i <- 1 to 12) {
+      db.put(Seq("a.b.c", "a.x.c", "a.b.d")(i % 3), s"p.$i".getBytes); tick(60000)
+    }
+    db.put("a.b...", "wild".getBytes) // fills the wc=1 bucket
+    db.sync()
+    // (pattern, BroadcastExchange nodes, Union present, topic equality
+    // pushed into the wc=0 scan). The anti-join sits under each union
+    // branch, so a static pattern broadcasts the tombstone side twice.
+    val expected = Seq(
+      ("a.b.c", 2, true, true), ("a.b.c?last=1h", 2, true, true),
+      ("a.b.c?last=50", 2, true, true), ("a.*.c", 1, false, false),
+      ("a...", 1, false, false))
+    for (tombstones <- Seq(false, true)) {
+      if (tombstones) { db.delete(1L, "a.x.c"); db.sync() }
+      for ((pattern, broadcasts, union, pushed) <- expected)
+        withClue(s"$pattern, tombstones=$tombstones: ") {
+          val plan = db.getFrame(Query(pattern)).queryExecution.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.executedPlan
+            case p => p
+          }
+          assert(plan.collect { case b: BroadcastExchangeExec => b }.size == broadcasts)
+          assert(plan.collect { case u: UnionExec => u }.nonEmpty == union)
+          val wc0Pushed = plan.collect {
+            case s: FileSourceScanExec if s.partitionFilters.exists(_.sql == "(wc = 0)") =>
+              s.metadata("PushedFilters")
+          }
+          if (pushed) {
+            val eq = s"EqualTo(topic,${pattern.takeWhile(_ != '?')})"
+            assert(wc0Pushed.size == 1 && wc0Pushed.head.contains(eq), wc0Pushed)
+          } else assert(wc0Pushed.isEmpty, wc0Pushed)
+        }
+    }
+  }
+
   test("SQL view over the store with topic_matches") {
     val (db, _, tick) = freshDb()
     for (i <- 1 to 6) { db.put(s"sqlv.a${i % 2}", s"v.$i".getBytes); tick(1000) }
@@ -738,17 +758,17 @@ class UnitDbSpec extends SparkSpec {
       hotRows.filterNot(_ == "h1"))
   }
 
-  test("compact folds a salted store's fan-out files back to one per partition") {
+  test("compact folds a partition written by several syncs back to one file") {
     val dir = Files.createTempDirectory("graftdb_compact_s").toString + "/store"
     var now = 1700000000000L
-    val db = UnitDb.open(spark, dir, clock = () => now, writeSaltBuckets = 4)
+    val db = UnitDb.open(spark, dir, clock = () => now)
     for (i <- 1 to 3) {
       for (j <- 1 to 8) db.put("s.hot", s"v$i-$j".getBytes)
-      db.sync() // salt spreads each sync across up to 4 files
+      db.sync() // each sync adds one file to the same (contract, wc, day)
     }
     val before = dayDirFiles(dir)
-    assert(before.values.head.size > 3,
-      s"salt should fan out the writes, got ${before.values.head.size} files")
+    assert(before.values.head.size == 3,
+      s"one file per sync expected, got ${before.values.head.size} files")
     val rows = db.get(Query("s.hot")).map(new String(_)).toSeq
     assert(db.compact(minFiles = 2) == 1)
     val after = dayDirFiles(dir)
@@ -833,6 +853,52 @@ class UnitDbSpec extends SparkSpec {
     intercept[IllegalStateException] { db.get(Query("close.test")) }
     val db2 = UnitDb.open(spark, dir, clock = () => now)
     assert(db2.get(Query("close.test")).map(new String(_)).toSeq == Seq("pending"))
+  }
+
+  test("every face of a closed store throws and writes no file") {
+    import scala.jdk.CollectionConverters._
+    def files(root: String): Set[java.nio.file.Path] = {
+      val walk = Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.toSet finally walk.close()
+    }
+    val dir = Files.createTempDirectory("graftdb_closed").toString + "/store"
+    val db = UnitDb.open(spark, dir, clock = () => 1700000000000L)
+    val id = db.put("closed.t", "kept".getBytes)
+    db.close()
+    val before = files(dir)
+    val faces: Seq[(String, () => Any)] = Seq(
+      "put" -> (() => db.put("closed.t", "x".getBytes)),
+      "putEntry" -> (() => db.putEntry(Entry("closed.t", "x".getBytes))),
+      "putEntries" -> (() => db.putEntries(Seq(Entry("closed.t", "x".getBytes)))),
+      "delete(seq)" -> (() => db.delete(1L, "closed.t")),
+      "delete(id)" -> (() => db.delete(id, "closed.t")),
+      "deleteEntry" -> (() => db.deleteEntry(Entry("closed.t", Array.emptyByteArray).withID(id))),
+      "deleteMatching" -> (() => db.deleteMatching(Query("closed.t"))),
+      "batch" -> (() => db.batch(_.put("closed.t", "x".getBytes))),
+      "newID" -> (() => db.newID()),
+      "get" -> (() => db.get(Query("closed.t"))),
+      "getFrame" -> (() => db.getFrame(Query("closed.t"))),
+      "scanFrame" -> (() => db.scanFrame(Query("closed.t"))),
+      "scanTyped" -> (() => db.scanTyped(Query("closed.t"))),
+      "tail" -> (() => db.tail(Query("closed.t"))),
+      "count" -> (() => db.count()),
+      "snapshot" -> (() => db.snapshot()),
+      "tombstonesFor" -> (() => db.tombstonesFor()),
+      "createView" -> (() => db.createView("closed_view")),
+      "vacuum" -> (() => db.vacuum()),
+      "compact" -> (() => db.compact()))
+    for ((face, call) <- faces)
+      withClue(s"$face: ") { intercept[IllegalStateException](call()) }
+    assert(files(dir) == before, "a closed store's directory changed")
+    // a mid-batch write() on a store closed inside the closure throws too
+    val dir2 = Files.createTempDirectory("graftdb_closed").toString + "/store"
+    val db2 = UnitDb.open(spark, dir2)
+    intercept[IllegalStateException] {
+      db2.batch { b => b.put("closed.t", "late".getBytes); db2.close(); b.write() }
+    }
+    assert(UnitDb.open(spark, dir2).get(Query("closed.t")).isEmpty)
+    assert(UnitDb.open(spark, dir).get(Query("closed.t")).map(new String(_)).toSeq ==
+      Seq("kept"))
   }
 
   test("parquet footers carry bloom filters on seq and topic (O20)") {

@@ -81,11 +81,10 @@ object UtpProf {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val base = java.nio.file.Files.createTempDirectory("graft_utp_prof").toString
-    // sync cadence sized so parquet flushes amortize, and the hot-day
-    // write salted across 8 writer tasks (one ingest day = one physical
-    // partition otherwise — a single-task parquet write)
-    val db = UnitDb.open(spark, base + "/store", autoFlushRows = 2000000,
-      writeSaltBuckets = 8)
+    // sync cadence sized so parquet flushes amortize; the one ingest day
+    // is one physical partition, so each sync is a single-task parquet
+    // write of that day
+    val db = UnitDb.open(spark, base + "/store", autoFlushRows = 2000000)
     val (srvTls, cliSsl) =
       if (transport == "tcps") { val (a, b) = tlsPair(); (Some(a), Some(b)) }
       else (None, None)

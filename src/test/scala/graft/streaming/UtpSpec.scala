@@ -4,7 +4,7 @@ import java.net.Socket
 import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
-import graft.engine.UnitDb
+import graft.engine.{PosixSwapCommit, StoreCommitProtocol, UnitDb}
 import graft.model.Query
 import graft.streaming.{UtpCodec => C}
 
@@ -544,6 +544,7 @@ class UtpSpec extends SparkSpec {
       assert(v.get("puts").asLong() == 2L, v.toString)
       assert(v.get("bytes_written").asLong() == 6L)
       assert(v.get("file_size").asLong() >= 0L)
+      assert(v.get("sync_failures").asLong() == 0L)
       // the per-face latency percentile blocks ride along populated
       val putLat = v.get("put_latency")
       assert(putLat.get("samples").asInt() >= 1)
@@ -563,6 +564,39 @@ class UtpSpec extends SparkSpec {
       srv.close()
       db.close()
     }
+  }
+
+  test("server: failed syncs are counted in varz, and close() rethrows the final one") {
+    val dir = Files.createTempDirectory("graft_utp_syncfail").toString + "/store"
+    val failing = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // the live-directory lookup is the first thing a data flush needs
+    val protocol = new StoreCommitProtocol {
+      override def resolveLive(path: String): String =
+        if (failing.get) throw new java.io.IOException("injected sync failure") else path
+      def commitRewrite(path: String, tmp: String, keep: Seq[String]): Unit =
+        PosixSwapCommit.commitRewrite(path, tmp, keep)
+    }
+    val db = UnitDb.open(spark, dir, commitProtocol = protocol)
+    val srv = new UtpServer(db, port = 0, syncEveryPuts = 1)
+    failing.set(true)
+    val cli = new UtpClient("127.0.0.1", srv.actualPort)
+    assert(cli.connect("syncfail") > 0)
+    cli.publish(("sf.a", "one".getBytes)) // crosses syncEveryPuts: background sync
+    val deadline = System.nanoTime() + 10000000000L
+    var failures = 0L
+    while (failures == 0L && System.nanoTime() < deadline) {
+      failures = cli.varz().get("sync_failures").asLong()
+      if (failures == 0L) Thread.sleep(20)
+    }
+    assert(failures >= 1L, "background sync failure not counted")
+    cli.close()
+    val e = intercept[java.io.IOException](srv.close())
+    assert(e.getMessage == "injected sync failure")
+    // nothing was lost: the row stayed buffered and lands once syncs work
+    failing.set(false)
+    db.sync()
+    assert(db.get(Query("sf.a")).map(new String(_)).toSeq == Seq("one"))
+    db.close()
   }
 
   test("ws: RFC 6455 accept key and frame round-trips") {
